@@ -107,7 +107,8 @@ def choose_access_pruning(evaluator: BatchEvaluator) -> bool:
     if not lazy:
         return False
     total = sum(_leaf_ref_cost(evaluator.forest.leaves[i]) for i in lazy)
-    edges = len(evaluator._parent_csr()[0])
+    # parent-CSR edges: two per interior node (its left and right child)
+    edges = 2 * (evaluator.forest.num_nodes - evaluator.n_leaf_nodes)
     density = total / max(evaluator.forest.num_nodes + edges, 1)
     return density >= ACCESS_PRUNING_MIN_COST_DENSITY
 

@@ -4,6 +4,18 @@ Tuned for the sandbox (single JVM, local[N], 128 GiB) but every knob is
 the one you'd set on a real 1000-executor cluster: AQE + skew-join for
 hot cells, bounded Arrow batches for the Python matcher, partition
 sizing so sf0.1 parquet splits sensibly.
+
+Python workers start from ``a_tree_spark._pyworker`` (set as
+``spark.python.daemon.module``), not ``pyspark.daemon``. Spark puts its
+``pyspark.zip``, ``py4j`` zip and spark-core jar first on the workers'
+path, and every Python task's setup calls ``importlib.invalidate_caches()``,
+which on Python 3.11 makes each zipimporter re-read its archive's index:
+measured 160-285 ms per task, more than a small match takes. The daemon
+module drops those archives when the same pyspark and py4j versions are
+installed unzipped (leaving the path alone otherwise) and then runs
+pyspark's own daemon. This is safe because these sessions are ``local[N]`` and the
+package is on the workers' ``PYTHONPATH`` (set below); ``extra_conf``
+can still override it.
 """
 
 from __future__ import annotations
@@ -64,6 +76,7 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "a_tree_spark._pyworker")
         # shuffle/spill to tmpfs: the sandbox's virtio disk has high,
         # variable latency (measured 2-40s swings on a 140MB shuffle);
         # on a real cluster this is local NVMe and not a concern

@@ -89,6 +89,14 @@ class AttributeTable:
             self._by_name[definition.name] = len(self._defs)
             self._defs.append(definition)
 
+    def __getstate__(self) -> dict:
+        # make_predicate's memo (ast.py) holds every predicate ever parsed
+        # against this table: driver-side parse state that no executor
+        # reads, and that would grow every shipped forest under churn
+        state = self.__dict__.copy()
+        state.pop("_predicate_cache", None)
+        return state
+
     def __len__(self) -> int:
         return len(self._defs)
 

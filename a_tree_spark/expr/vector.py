@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from decimal import Decimal
 from fractions import Fraction
+from itertools import chain
+from operator import attrgetter
 
 import numpy as np
 import pandas as pd
@@ -47,6 +49,12 @@ from .compiler import AND, LEAF, CompiledForest
 FALSE, UNKNOWN, TRUE = np.uint8(0), np.uint8(1), np.uint8(2)
 
 DECIMAL_SCALE = 6  # Float attrs are exact decimals at scale 6 (SURVEY §1.2)
+
+
+#: leaf op -> planner group class: 0 grouped equality, 1 scalar
+#: membership, 2 list membership; every other op (3) is generic
+_GROUP_CLASS = {Op.EQ: 0, Op.IN: 1, Op.NOT_IN: 1, Op.ONE_OF: 2, Op.NONE_OF: 2}
+_OP, _OPERAND, _ATTR = attrgetter("op"), attrgetter("operand"), attrgetter("attr_index")
 
 
 def _true_mask(result: np.ndarray, null_mask: np.ndarray) -> np.ndarray:
@@ -232,27 +240,24 @@ class _MemberGroup:
         self.is_list = is_list
         self.leaf_idxs = leaf_idxs
         self.n_leaves = len(leaf_idxs)
-        self.negated = np.array(
-            [forest.leaves[i].op in (Op.NOT_IN, Op.NONE_OF) for i in leaf_idxs]
+        group = list(map(forest.leaves.__getitem__, leaf_idxs))
+        ops = np.fromiter(map(_OP, group), dtype=object, count=len(group))
+        self.negated = (ops == Op.NOT_IN) | (ops == Op.NONE_OF)
+        # one factorize over every (leaf, value) occurrence: vids number
+        # values in first-occurrence order, and sorting occurrences by
+        # (vid, position) lists each vid's group positions in ascending
+        # order (the CSR). The unique int64 key sorts ~4x faster than a
+        # stable argsort of the vids.
+        operands = list(map(_OPERAND, group))
+        lengths = np.fromiter(map(len, operands), dtype=np.int64, count=len(operands))
+        codes, uniques = pd.Series(list(chain.from_iterable(operands))).factorize()
+        group_pos = np.repeat(np.arange(self.n_leaves, dtype=np.int64), lengths)
+        n = len(codes)
+        self.vid_leaves = group_pos[np.sort(codes * n + np.arange(n)) % n]
+        self.vid_offsets = np.concatenate(
+            [[0], np.cumsum(np.bincount(codes, minlength=len(uniques)))]
         )
-        vocab: dict = {}
-        per_vid_leaves: list[list[int]] = []
-        for group_pos, leaf_idx in enumerate(leaf_idxs):
-            for value in forest.leaves[leaf_idx].operand:
-                vid = vocab.get(value)
-                if vid is None:
-                    vid = len(vocab)
-                    vocab[value] = vid
-                    per_vid_leaves.append([])
-                per_vid_leaves[vid].append(group_pos)
-        counts = np.array([len(v) for v in per_vid_leaves], dtype=np.int64)
-        self.vid_offsets = np.concatenate([[0], np.cumsum(counts)])
-        self.vid_leaves = (
-            np.concatenate([np.asarray(v, dtype=np.int64) for v in per_vid_leaves])
-            if per_vid_leaves
-            else np.empty(0, dtype=np.int64)
-        )
-        self.vocab = vocab
+        self.vocab = dict(zip(uniques.tolist(), range(len(uniques))))
 
     def _codes(self, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Map raw values -> (valid_mask, vids). Ints use searchsorted on
@@ -411,9 +416,20 @@ class BatchEvaluator:
         )
         self.access_pruning = access_pruning
         self._plan_leaf_groups()
-        self._plan_levels()
-        self._plan_subscribers()
+        self._plan_subscribers(self._plan_levels())
         self._plan_access()
+
+    def __getstate__(self) -> dict:
+        """Ship plan state only: work buffers rebuild per process, and
+        the parent CSR ships (built once, here) only when the two-phase
+        pass will read it."""
+        state = self.__dict__.copy()
+        state.pop("_buf_cache", None)
+        state.pop("_prune_buf_cache", None)
+        state.pop("_parent_csr_cache", None)
+        if self.access_pruning and self.lazy_leaf_idxs:
+            state["_parent_csr_cache"] = self._parent_csr()
+        return state
 
     # ------------------------------------------------------------ planning
 
@@ -430,43 +446,51 @@ class BatchEvaluator:
           (src/atree.rs:530-591).
 
         Everything else evaluates per-leaf (still vectorized per batch).
-        """
-        forest = self.forest
-        eq_groups: dict[int, list[int]] = {}
-        member_groups: dict[tuple[int, bool], list[int]] = {}
-        generic: list[int] = []
-        for leaf_idx, leaf in enumerate(forest.leaves):
-            if leaf.op is Op.EQ and not isinstance(leaf.operand, Decimal):
-                eq_groups.setdefault(leaf.attr_index, []).append(leaf_idx)
-            elif leaf.op in (Op.IN, Op.NOT_IN):
-                member_groups.setdefault((leaf.attr_index, False), []).append(leaf_idx)
-            elif leaf.op in (Op.ONE_OF, Op.NONE_OF):
-                member_groups.setdefault((leaf.attr_index, True), []).append(leaf_idx)
-            else:
-                generic.append(leaf_idx)
+        Groups are keyed (class, attribute) and ordered by their first
+        leaf; undersized groups fall back to generic in that order."""
+        leaves = self.forest.leaves
+        ops = np.fromiter(map(_OP, leaves), dtype=object, count=len(leaves))
+        attr = np.fromiter(map(_ATTR, leaves), dtype=np.int64, count=len(leaves))
+        cls = np.full(len(leaves), 3, dtype=np.int64)
+        for op, group_cls in _GROUP_CLASS.items():
+            cls[ops == op] = group_cls
+        cls[[i for i in np.flatnonzero(cls == 0).tolist()
+             if isinstance(leaves[i].operand, Decimal)]] = 3  # exact-decimal EQ
+        grouped = np.flatnonzero(cls < 3)
+        key = (cls * (attr.max(initial=0) + 1) + attr)[grouped]
+        order = np.argsort(key, kind="stable")
+        by_key = grouped[order]
+        splits = np.flatnonzero(np.diff(key[order])) + 1
+        groups = sorted(np.split(by_key, splits) if len(by_key) else [],
+                        key=lambda g: g[0])
 
         self.eq_groups: list[tuple[int, np.ndarray, list[int]]] = []
-        for attr_index, leaf_idxs in eq_groups.items():
-            if len(leaf_idxs) < 4:
-                generic.extend(leaf_idxs)
-                continue
-            operands = [forest.leaves[i].operand for i in leaf_idxs]
-            order = sorted(range(len(operands)), key=lambda i: operands[i])
-            sorted_ops = np.array([operands[i] for i in order])
-            sorted_leaf_idxs = [leaf_idxs[i] for i in order]
-            self.eq_groups.append((attr_index, sorted_ops, sorted_leaf_idxs))
-
         self.member_groups: list[_MemberGroup] = []
-        for (attr_index, is_list), leaf_idxs in member_groups.items():
-            if len(leaf_idxs) < 2:
-                generic.extend(leaf_idxs)
-                continue
-            self.member_groups.append(
-                _MemberGroup(forest, attr_index, is_list, leaf_idxs)
-            )
-        self.generic_leaves = generic
+        small_eq: list[int] = []
+        small_member: list[int] = []
+        for idxs in groups:
+            group_cls, attr_index = int(cls[idxs[0]]), int(attr[idxs[0]])
+            leaf_idxs = idxs.tolist()
+            if group_cls == 0:
+                if len(leaf_idxs) < 4:
+                    small_eq.extend(leaf_idxs)
+                    continue
+                operands = [leaves[i].operand for i in leaf_idxs]
+                rank = sorted(range(len(operands)), key=operands.__getitem__)
+                self.eq_groups.append((
+                    attr_index,
+                    np.array([operands[i] for i in rank]),
+                    [leaf_idxs[i] for i in rank],
+                ))
+            elif len(leaf_idxs) < 2:
+                small_member.extend(leaf_idxs)
+            else:
+                self.member_groups.append(
+                    _MemberGroup(self.forest, attr_index, group_cls == 2, leaf_idxs)
+                )
+        self.generic_leaves = np.flatnonzero(cls == 3).tolist() + small_eq + small_member
 
-    def _plan_levels(self) -> None:
+    def _plan_levels(self) -> np.ndarray:
         """Level-contiguous node layout: the evaluator renumbers nodes
         (``_perm``: forest id -> sweep slot) so that the leaf-node block
         and every (height, kind) level group occupy CONTIGUOUS slots in
@@ -481,63 +505,44 @@ class BatchEvaluator:
           into a separate matched buffer (2 x 41 MB per 14k-row chunk at
           1e5 subs) disappears entirely.
 
-        The ordering is deterministic (sorted levels, roots-first then
-        forest id), so two evaluators over the same compiled forest
-        agree on root indexing — root_subscription_map relies on that."""
+        The ordering is one lexsort over (level, kind, not-root, forest
+        id) — leaves are level 0 and sort first — so two evaluators over
+        the same compiled forest agree on root indexing;
+        root_subscription_map relies on that. Returns the root forest
+        ids in slot order (the canonical root indexing everywhere)."""
         forest = self.forest
-        is_root = set(forest.node_subs.keys())
+        nn = forest.num_nodes
+        kind = np.asarray(forest.node_kind, dtype=np.int64)
+        level = np.asarray(forest.node_level, dtype=np.int64)
+        left = np.asarray(forest.node_left, dtype=np.int64)
+        right = np.asarray(forest.node_right, dtype=np.int64)
+        is_root = np.zeros(nn, dtype=bool)
+        is_root[np.fromiter(forest.node_subs, dtype=np.int64)] = True
 
-        def block_order(nodes: list[int]) -> list[int]:
-            return sorted(nodes, key=lambda i: (i not in is_root, i))
-
-        by_level: dict[int, dict[int, list[int]]] = {}
-        leaf_nodes = []
-        for i in range(forest.num_nodes):
-            kind = forest.node_kind[i]
-            if kind == LEAF:
-                leaf_nodes.append(i)
-            else:
-                by_level.setdefault(forest.node_level[i], {}).setdefault(
-                    kind, []
-                ).append(i)
-
-        leaf_nodes = block_order(leaf_nodes)
-        new_order = list(leaf_nodes)
-        root_segments: list[tuple[int, int]] = []
-        n_leaf_roots = sum(1 for i in leaf_nodes if i in is_root)
-        if n_leaf_roots:
-            root_segments.append((0, n_leaf_roots))
-        level_blocks: list[tuple[int, int, int, list[int]]] = []
-        for level in sorted(by_level):
-            for kind in sorted(by_level[level]):
-                nodes = block_order(by_level[level][kind])
-                lo = len(new_order)
-                new_order.extend(nodes)
-                level_blocks.append((kind, lo, len(new_order), nodes))
-                k_roots = sum(1 for i in nodes if i in is_root)
-                if k_roots:
-                    root_segments.append((lo, k_roots))
-
-        perm = np.empty(max(forest.num_nodes, 1), dtype=np.int64)
-        perm[np.asarray(new_order, dtype=np.int64)] = np.arange(
-            len(new_order), dtype=np.int64
-        )
+        new_order = np.lexsort((np.arange(nn), ~is_root, kind, level))
+        perm = np.zeros(max(nn, 1), dtype=np.int64)
+        perm[new_order] = np.arange(nn, dtype=np.int64)
         self._perm = perm
-        self.root_segments = root_segments
-        # roots in slot order — the canonical root indexing everywhere
-        self._roots_in_slot_order = [
-            i for i in new_order if i in is_root
-        ]
 
+        block = (level * 3 + kind)[new_order]
+        bounds = np.flatnonzero(np.diff(block)) + 1
+        starts = [0] + bounds.tolist() if nn else []
+        ends = bounds.tolist() + [nn]
+        slot_is_root = is_root[new_order]
+        roots_before = np.concatenate([[0], np.cumsum(slot_is_root)])
+        self.n_leaf_nodes = int(np.count_nonzero(kind == LEAF))
+        self.root_segments: list[tuple[int, int]] = []
         self.levels: list[tuple[int, int, int, np.ndarray, np.ndarray]] = []
-        for kind, lo, hi, nodes in level_blocks:
-            left = perm[np.array([forest.node_left[i] for i in nodes], dtype=np.int64)]
-            right = perm[np.array([forest.node_right[i] for i in nodes], dtype=np.int64)]
-            self.levels.append((kind, lo, hi, left, right))
-        self.n_leaf_nodes = len(leaf_nodes)
-        self.leaf_of_node = np.array(
-            [forest.node_left[i] for i in leaf_nodes], dtype=np.int64
-        )
+        for lo, hi in zip(starts, ends):
+            k_roots = int(roots_before[hi] - roots_before[lo])
+            if k_roots:
+                self.root_segments.append((lo, k_roots))
+            if lo >= self.n_leaf_nodes:
+                nodes = new_order[lo:hi]
+                self.levels.append(
+                    (int(kind[nodes[0]]), lo, hi, perm[left[nodes]], perm[right[nodes]])
+                )
+        self.leaf_of_node = left[new_order[: self.n_leaf_nodes]]
         # interning guarantees one node per distinct leaf predicate;
         # the pruning pass relies on this to scatter leaf candidates
         # with plain indexed assignment (checked once at plan time —
@@ -547,8 +552,9 @@ class BatchEvaluator:
                 "leaf_of_node is not injective: leaf interning invariant "
                 "violated; pruned scatter would drop candidates"
             )
+        return new_order[slot_is_root]
 
-    def _plan_subscribers(self) -> None:
+    def _plan_subscribers(self, roots: np.ndarray) -> None:
         """CSR of DISTINCT expression roots -> subscriber ids. CSE means
         many subscriptions share one root (4.3x on the templated 100k
         workload), so match decode runs per distinct root and expands to
@@ -557,23 +563,14 @@ class BatchEvaluator:
         subs (~45% of evaluate_prepared). Root order follows the sweep
         slot order from _plan_levels so decode segments index straight
         into this CSR."""
-        forest = self.forest
-        root_nodes = []
-        sub_chunks = []
-        counts = []
-        for node_idx in self._roots_in_slot_order:
-            subs = forest.node_subs[node_idx]
-            root_nodes.append(self._perm[node_idx])
-            sub_chunks.append(np.asarray(subs))
-            counts.append(len(subs))
-        self.root_nodes = np.array(root_nodes, dtype=np.int64)
-        self.root_sub_counts = np.array(counts, dtype=np.int64)
+        subs = [self.forest.node_subs[r] for r in roots.tolist()]
+        flat = list(chain.from_iterable(subs))
+        self.root_nodes = self._perm[roots]
+        self.root_sub_counts = np.fromiter(map(len, subs), dtype=np.int64, count=len(subs))
         self.root_sub_offsets = np.concatenate(
             [[0], np.cumsum(self.root_sub_counts)]
         ).astype(np.int64)
-        self.root_sub_ids = (
-            np.concatenate(sub_chunks) if sub_chunks else np.empty(0, dtype=np.int64)
-        )
+        self.root_sub_ids = np.asarray(flat) if flat else np.empty(0, dtype=np.int64)
         # flat per-subscription views (public: matcher sizing, tests)
         self.sub_node_idxs = np.repeat(self.root_nodes, self.root_sub_counts)
         self.sub_ids = self.root_sub_ids
@@ -587,6 +584,8 @@ class BatchEvaluator:
         children (node_left = cheapest, compiler.py, ref atree.rs:133-137),
         so the access set is the leaves reachable from the roots without
         ever entering an AND's right child; everything else is LAZY.
+        Reachability propagates one level block at a time, top down:
+        every parent sits at a higher level than its children.
 
         Vectorized restatement: lazy leaves are assumed TRUE for an
         upper-bound sweep (sound in NNF — Kleene truth is monotone under
@@ -596,29 +595,17 @@ class BatchEvaluator:
         membership index, grouped equality) stay dense: they already
         cost O(occurrences), which IS the access-predicate economics —
         only per-leaf generic evaluation is worth deferring."""
-        forest = self.forest
-        access_nodes: set[int] = set()
-        stack = list(forest.node_subs.keys())
-        while stack:
-            node = stack.pop()
-            if node in access_nodes:
-                continue
-            access_nodes.add(node)
-            kind = forest.node_kind[node]
-            if kind == LEAF:
-                continue
-            stack.append(forest.node_left[node])  # cheapest child = access
+        access = np.zeros(len(self._perm), dtype=bool)
+        for lo, k in self.root_segments:
+            access[lo : lo + k] = True
+        for kind, lo, hi, left, right in reversed(self.levels):
+            live = access[lo:hi]
+            access[left[live]] = True  # cheapest child = access
             if kind != AND:
-                stack.append(forest.node_right[node])  # OR defers nothing
-
-        access_leaves = {
-            forest.node_left[node]
-            for node in access_nodes
-            if forest.node_kind[node] == LEAF
-        }
-        self.lazy_leaf_idxs = [
-            i for i in self.generic_leaves if i not in access_leaves
-        ]
+                access[right[live]] = True  # OR defers nothing
+        access_leaves = self.leaf_of_node[access[: self.n_leaf_nodes]]
+        generic = np.asarray(self.generic_leaves, dtype=np.int64)
+        self.lazy_leaf_idxs = generic[~np.isin(generic, access_leaves)].tolist()
         self._lazy_set = set(self.lazy_leaf_idxs)
 
     # ------------------------------------------------------------ columns

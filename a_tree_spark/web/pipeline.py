@@ -469,8 +469,12 @@ def fused_match_pages(
 
     names = PAGE_ATTRIBUTES.names()
     idx = {name: i for i, name in enumerate(names)}
-    token_group = next(
-        (g for g in evaluator.member_groups if g.attr_index == idx["lead_tokens"]),
+    # the lead_tokens member group is read from bc.value inside run():
+    # capturing the group itself would re-ship its vocabulary (0.5 MB at
+    # 10k subscriptions) inside every task's serialized command
+    token_group_pos = next(
+        (pos for pos, g in enumerate(evaluator.member_groups)
+         if g.attr_index == idx["lead_tokens"]),
         None,
     )
     tokens_have_generic_leaves = any(
@@ -490,6 +494,9 @@ def fused_match_pages(
 
     def run(batches):
         ev = bc.value
+        token_group = (
+            None if token_group_pos is None else ev.member_groups[token_group_pos]
+        )
         # task-level combine state for emit="cell_root_partials": keys
         # repeat across the task's batches (hot cells x shared roots),
         # so the final np.unique over the whole task emits each distinct
